@@ -14,41 +14,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from asset_prices_parquet_saver_spark.functions.pins import pin as _pin
+from asset_prices_parquet_saver_spark.functions.pins import memo as _memo, pin as _pin
 from asset_prices_parquet_saver_spark.functions.pandas_ops import spread
 from asset_prices_parquet_saver_spark.operators.similarity import auto_num_blocks
-
-# Session-scoped memo for the shared LSH front end (see minhash_dedup):
-# the pair stage (shingles -> signatures -> band pairs -> verified
-# jaccard) and the connected-component labels are identical across the
-# dedup query family (pair listing, end-to-end dedup, cluster report),
-# so a run that executes several of them rebuilds the same relation
-# from scratch each time. Keyed by (applicationId, input plan
-# semanticHash, data-version token, every parameter); values are
-# localCheckpointed, so a hit is a truncated-lineage scan, not a
-# recompute. FIFO-bounded via similarity.memo_put and dropped with the
-# process. The data-version token (similarity.data_version_token:
-# digest of the plan's sorted file listing) guards the
-# incremental/streaming corpus case — semanticHash alone is a pure
-# 32-bit PLAN hash that cannot see the files under a path changing.
-# Residual caveat: a plan not backed by files (in-memory relation)
-# keys on the plan hash only, so memo=True there requires the input to
-# be immutable for the process lifetime — which is why memo defaults
-# to False everywhere in the library surface.
-_LSH_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _lsh_memo_key(df: DataFrame, *params) -> tuple:
-    from asset_prices_parquet_saver_spark.operators.similarity import (
-        data_version_token,
-    )
-
-    return (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        data_version_token(df),
-        *params,
-    )
 
 
 # ---------------------------------------------------------------- exact
@@ -209,12 +177,6 @@ def _shingle_set(txt, n: int, ws) -> set:
     return set(w) if n == 1 else {" ".join(w[j : j + n]) for j in range(len(w) - n + 1)}
 
 
-#: per-task shingle→hash memo toggle (hash-identical either way; see
-#: _hashed_shingle_rows). Module-level so an interleaved A/B can flip
-#: it between same-process runs — the kernel captures it at build time.
-_SHINGLE_MEMO = True
-
-
 def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
     """Shared first stage of the shingle pipelines: ``(sh, docs)`` where
     ``docs`` is (id, hs: array<long>) — one hashed-shingle-set row per
@@ -228,8 +190,6 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
 
     from asset_prices_parquet_saver_spark.functions.pandas_ops import chunked
 
-    use_memo = _SHINGLE_MEMO  # captured at kernel-BUILD time (A/B seam)
-
     def hash_shingles(batches):
         ws = _re.compile(r"\s+", _re.ASCII)
         # per-task shingle→hash memo (guide §4.5 heavyweight-init
@@ -240,7 +200,7 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
         # runaway vocabulary clears the memo rather than growing it.
         memo: dict[str, int] = {}
 
-        def h_memo(s: str) -> int:
+        def h(s: str) -> int:
             v = memo.get(s)
             if v is None:
                 v = int.from_bytes(
@@ -253,14 +213,6 @@ def _hashed_shingle_rows(df: DataFrame, id_col: str, text_col: str, n: int):
                 memo[s] = v
             return v
 
-        def h_plain(s: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(s.encode(), digest_size=8).digest(),
-                "big",
-                signed=True,
-            )
-
-        h = h_memo if use_memo else h_plain
         for pdf in batches:
             ids, arrs = [], []
             for doc_id, txt in zip(pdf[id_col], pdf[text_col]):
@@ -1383,13 +1335,16 @@ def minhash_dedup(
             f"{num_hashes} (rows_per_band >= 1, no dropped signature rows)"
         )
     if memo:
-        key = _lsh_memo_key(
-            df, "pairs", id_col, text_col, n, num_hashes, bands,
-            threshold, hash_family,
+        # materialized once; later family members scan the checkpoint
+        return _memo(
+            df,
+            ("pairs", id_col, text_col, n, num_hashes, bands, threshold,
+             hash_family),
+            lambda: minhash_dedup(
+                df, id_col, text_col, n, num_hashes, bands, threshold,
+                hash_family,
+            ),
         )
-        hit = _LSH_MEMO.get(key)
-        if hit is not None:
-            return hit
     rows_per_band = num_hashes // bands
     if hash_family == "md5":
         arrs = _portable_signature_arrays(
@@ -1409,14 +1364,7 @@ def minhash_dedup(
     cand = lsh_candidate_pairs(
         arrs.filter(F.col("n_sh") > 0).select("id", "sig"), bands, rows_per_band
     )
-    pairs = _verified_jaccard(cand, arrs.select("id", "arr", "n_sh"), threshold)
-    if memo:
-        # materialize once; later family members scan the checkpoint
-        pairs = pairs.localCheckpoint()
-        from asset_prices_parquet_saver_spark.operators.similarity import memo_put
-
-        memo_put(_LSH_MEMO, key, pairs)
-    return pairs
+    return _verified_jaccard(cand, arrs.select("id", "arr", "n_sh"), threshold)
 
 
 # ------------------------------------------- clusters / end-to-end dedup
@@ -1501,25 +1449,21 @@ def _components_memo(
     memoized alongside the pair relation (the CC labels are a pure
     function of the same inputs, and the iterative min-label loop is
     the other repeated cost)."""
-    if memo:
-        key = _lsh_memo_key(
-            df, "cc", id_col, text_col, n, num_hashes, bands,
-            threshold, hash_family,
+    def build() -> DataFrame:
+        return connected_components(
+            minhash_dedup(
+                df, id_col, text_col, n, num_hashes, bands, threshold,
+                hash_family, memo=memo,
+            )
         )
-        hit = _LSH_MEMO.get(key)
-        if hit is not None:
-            return hit
-    pairs = minhash_dedup(
-        df, id_col, text_col, n, num_hashes, bands, threshold,
-        hash_family, memo=memo,
-    )
-    comp = connected_components(pairs)
-    if memo:
-        comp = comp.localCheckpoint()
-        from asset_prices_parquet_saver_spark.operators.similarity import memo_put
 
-        memo_put(_LSH_MEMO, key, comp)
-    return comp
+    if not memo:
+        return build()
+    return _memo(
+        df,
+        ("cc", id_col, text_col, n, num_hashes, bands, threshold, hash_family),
+        build,
+    )
 
 
 def fuzzy_dedup(
@@ -1848,34 +1792,21 @@ def duplicated_spans(
     return _merge_spans(hits, k)
 
 
-#: session-scoped memo for the checkpointed window relation: the spans
-#: / excision / duplication-report queries all start from the same
-#: kernel pass, and an unmemoized per-call localCheckpoint would both
-#: recompute it and pin O(corpus windows) blocks per call in a
-#: long-lived process (the ADVICE-r8 memo discipline — FIFO-bounded,
-#: evictions unpersisted, data-version-keyed so a mutated corpus can
-#: never replay a stale checkpoint). Cleared by bench._clear_memos.
-_WINDOW_MEMO: dict[tuple, DataFrame] = {}
-
-
 def _window_rows_memo(
     df: DataFrame, id_col: str, text_col: str, k: int, memo: bool
 ) -> DataFrame:
-    from asset_prices_parquet_saver_spark.operators.similarity import memo_put
-
+    """The checkpointed window relation the spans / excision /
+    duplication-report queries start from, shared through the session
+    memo when ``memo`` is set. Without it (the library default) the
+    barrier still pays off within one call: the spans feed both the
+    winners join and the excision/report consumers."""
     if not memo:
-        # opt-in memo discipline (library default False, like the rest
-        # of the dedup family); the localCheckpoint barrier still pays
-        # off within a single call (spans feed both the winners join
-        # and the excision/report consumers).
         return window_rows(df, id_col, text_col, k).localCheckpoint()
-    key = _lsh_memo_key(df, "windows", id_col, text_col, k)
-    hit = _WINDOW_MEMO.get(key)
-    if hit is not None:
-        return hit
-    wins = window_rows(df, id_col, text_col, k).localCheckpoint()
-    memo_put(_WINDOW_MEMO, key, wins)
-    return wins
+    return _memo(
+        df,
+        ("windows", id_col, text_col, k),
+        lambda: window_rows(df, id_col, text_col, k),
+    )
 
 
 def _merge_spans(hits: DataFrame, k: int) -> DataFrame:

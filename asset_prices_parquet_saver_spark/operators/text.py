@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from asset_prices_parquet_saver_spark.functions.pandas_ops import (
     spread as spread_narrow,
 )
-from asset_prices_parquet_saver_spark.functions.pins import pin
+from asset_prices_parquet_saver_spark.functions.pins import memo, pin
 from asset_prices_parquet_saver_spark.operators.dedup import words
 
 #: BPE-ish tokenizer: letter runs, digit runs, single other non-space.
@@ -1114,13 +1114,6 @@ def positional_index(
     ).select("term", "id", (F.col("pos0") + 1).alias("pos"))
 
 
-#: memo of checkpointed query-term postings, FIFO-bounded with
-#: unpersist-on-evict (similarity.memo_put) so repeated ad-hoc
-#: phrase/proximity queries in a long-lived process don't accumulate
-#: checkpoint blocks.
-_POSTINGS_MEMO: dict = {}
-
-
 def term_postings(
     df: DataFrame, id_col: str, text_col: str, terms: tuple
 ) -> DataFrame:
@@ -1129,31 +1122,15 @@ def term_postings(
     downstream join branch, but only the query terms' postings ever
     materialize (corpus-size-independent for selective terms; the
     unfiltered form would checkpoint corpus × tokens rows per query).
-    Memoized per (app, plan, data-version, terms) with FIFO
-    unpersist-on-evict."""
-    from asset_prices_parquet_saver_spark.operators.similarity import (
-        data_version_token,
-        memo_put,
+    Held in the session memo (``pins.memo``), so repeated ad-hoc
+    phrase/proximity queries reuse one checkpoint."""
+    return memo(
+        df,
+        ("postings", id_col, text_col, tuple(sorted(set(terms)))),
+        lambda: positional_index(df, id_col, text_col).filter(
+            F.col("term").isin(*terms)
+        ),
     )
-
-    key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        data_version_token(df),
-        id_col,
-        text_col,
-        tuple(sorted(set(terms))),
-    )
-    hit = _POSTINGS_MEMO.get(key)
-    if hit is not None:
-        return hit
-    idx = (
-        positional_index(df, id_col, text_col)
-        .filter(F.col("term").isin(*terms))
-        .localCheckpoint()
-    )
-    memo_put(_POSTINGS_MEMO, key, idx)
-    return idx
 
 
 def _phrase_hits(idx: DataFrame, terms: list) -> DataFrame:

@@ -264,34 +264,9 @@ def _clear_memos() -> None:
     (memo-empty) measurement; the warm path is reported separately as
     ``memo_warm`` so the memo win stays visible without polluting the
     cross-round comparisons."""
-    from asset_prices_parquet_saver_spark.operators import (
-        dedup,
-        similarity,
-        text,
-    )
+    from asset_prices_parquet_saver_spark.functions.pins import clear_memos
 
-    # POP + UNPERSIST, not .clear(): dropping only the Python
-    # references leaves every memoized localCheckpoint's blocks in the
-    # block manager until a JVM GC happens to run — across a ~600-
-    # sample bench that accumulation is what OOM'd the sf1 decade
-    # (java heap, near_dup_pair_report) and is the long-run elevation
-    # mechanism NOTES recorded for pii_redaction in the r9 driver run.
-    for memo in (
-        dedup._LSH_MEMO,
-        # substring-dedup family memoizes its checkpointed window
-        # relation
-        dedup._WINDOW_MEMO,
-        similarity._PAIR_MEMO,
-        # phrase/proximity memoize their term-filtered postings
-        # checkpoint
-        text._POSTINGS_MEMO,
-    ):
-        while memo:
-            _, df = memo.popitem()
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # a dead session's blocks are already gone
+    clear_memos()
 
 
 def _reclaim(spark) -> None:

@@ -16,3 +16,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def unpinned(monkeypatch):
+    """``unpinned(fn)`` runs ``fn`` with ``pins.ENABLED`` off — the
+    unpinned reference plan — and restores the seam when ``fn``
+    returns, raises, or the test ends."""
+    from asset_prices_parquet_saver_spark.functions import pins
+
+    def run(fn):
+        with monkeypatch.context() as m:
+            m.setattr(pins, "ENABLED", False)
+            return fn()
+
+    return run

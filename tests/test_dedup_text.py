@@ -300,10 +300,11 @@ def test_lsh_memo_shares_pair_stage_across_family(spark, sf_dir):
     once per (corpus, params) and reused — identical results, same
     checkpointed object on a second call — and a different corpus or
     parameter set never hits the wrong entry."""
+    from asset_prices_parquet_saver_spark.functions import pins
     from asset_prices_parquet_saver_spark.operators import dedup
     from asset_prices_parquet_saver_spark.sources.tables import read_table
 
-    dedup._LSH_MEMO.clear()
+    pins.clear_memos()
     d = read_table(spark, sf_dir, "documents")
     plain = dedup.minhash_dedup(d, "doc_id", "text", hash_family="md5")
     memo1 = dedup.minhash_dedup(d, "doc_id", "text", hash_family="md5", memo=True)
@@ -313,10 +314,11 @@ def test_lsh_memo_shares_pair_stage_across_family(spark, sf_dir):
     assert rows(memo1) == rows(plain)
 
     # the cluster report and fuzzy dedup reuse the SAME memoized stages
-    before = set(dedup._LSH_MEMO)
+    before = set(pins._MEMO)
     rep = dedup.dedup_cluster_report(d, "doc_id", "text", hash_family="md5", memo=True)
     fuz = dedup.fuzzy_dedup(d, "doc_id", "text", hash_family="md5", memo=True)
-    assert len(dedup._LSH_MEMO) == len(before) + 1  # only the cc entry was added
+    assert len(pins._MEMO) == len(before) + 1  # only the cc entry was added
+    assert [k[3] for k in set(pins._MEMO) - before] == ["cc"]
     assert rows(rep) == rows(dedup.dedup_cluster_report(d, "doc_id", "text", hash_family="md5"))
     assert rows(fuz.select("doc_id")) == rows(
         dedup.fuzzy_dedup(d, "doc_id", "text", hash_family="md5").select("doc_id")
@@ -325,7 +327,7 @@ def test_lsh_memo_shares_pair_stage_across_family(spark, sf_dir):
     # different params -> different key, no false sharing
     other = dedup.minhash_dedup(d, "doc_id", "text", threshold=0.9, memo=True, hash_family="md5")
     assert other is not memo1
-    dedup._LSH_MEMO.clear()
+    pins.clear_memos()
 
 
 def test_winnowing_guarantee_shared_passage(spark):
@@ -459,6 +461,7 @@ def test_term_postings_materializes_only_query_terms(spark):
     (corpus-size-independent for selective terms), not corpus x tokens
     rows — the shape that makes ad-hoc phrase/proximity search viable
     against a big corpus."""
+    from asset_prices_parquet_saver_spark.functions import pins
     from asset_prices_parquet_saver_spark.operators import text as text_ops
 
     rows = [(i, "alpha beta " + ("filler word common text " * 10))
@@ -468,9 +471,11 @@ def test_term_postings_materializes_only_query_terms(spark):
     # 20 docs x 2 query-term postings, NOT 20 x ~52 token postings
     assert idx.count() == 40
     assert set(r["term"] for r in idx.collect()) == {"alpha", "beta"}
-    # memo: same (plan, terms) returns the same checkpointed relation
+    # memo: same (plan, terms) returns the same checkpointed relation,
+    # held in the shared session memo under the "postings" tag
     again = text_ops.term_postings(df, "doc_id", "text", ("beta", "alpha"))
     assert again is idx
+    assert [k[3] for k, v in pins._MEMO.items() if v is idx] == ["postings"]
 
 
 def test_indexed_phrase_and_proximity_match_adhoc_and_bucket_prune(spark):

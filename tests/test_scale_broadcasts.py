@@ -72,21 +72,14 @@ def no_auto_broadcast(spark):
 
 @pytest.mark.parametrize("name", SCALE_QUERIES)
 def test_scaling_dims_shuffle_join_when_broadcast_impossible(
-    spark, sf_dir, name, no_auto_broadcast
+    spark, sf_dir, name, no_auto_broadcast, unpinned
 ):
     # build with the shared-subtree pin seam OFF: a pinned query's
     # final plan reads the fact join from a checkpointed ExistingRDD,
     # hiding the join strategy this lint exists to check — the
     # unpinned form plans the identical join subtree inline (the pin
     # never changes strategy, only how many times the subtree runs)
-    from asset_prices_parquet_saver_spark.functions import pins
-
-    old = pins.ENABLED
-    pins.ENABLED = False
-    try:
-        df = QUERIES[name](spark, sf_dir)
-    finally:
-        pins.ENABLED = old
+    df = unpinned(lambda: QUERIES[name](spark, sf_dir))
     plan = df._jdf.queryExecution().executedPlan().toString()
     if name != "nation_trade_pagerank":
         # the scaling-dim joins fall back to a shuffle strategy...
