@@ -55,10 +55,15 @@ What a pin or memo entry costs and guarantees:
   the same cap applied to each of four separate dicts, so up to 128
   entries could be held.
 
-``ENABLED`` is a measurement seam for scripts/ab_interleaved.py —
-flipping it False rebuilds plans in the duplicated form so the pin's
-win is measurable inside one session (tests use it as the unpinned
-reference). Always True in production. It does not affect the memo.
+``ENABLED`` is a measurement seam for ``scripts/profile.py --ab
+asset_prices_parquet_saver_spark.functions.pins:ENABLED`` — flipping it
+False rebuilds plans in the duplicated form so the pin's win is
+measurable inside one session (tests use it as the unpinned
+reference). Always True in production. It covers :func:`pin` only: it
+does not affect the memo, nor the three direct
+``localCheckpoint(eager=False)`` barriers in ``operators/globalorder.py``
+(``with_global_row_number``, ``with_grouped_row_number``,
+``with_global_cumsum``), which stay pinned during such an A/B.
 """
 
 from __future__ import annotations
@@ -68,7 +73,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
-#: A/B seam (scripts/ab_interleaved.py) — True in production
+#: A/B seam for pin() only (scripts/profile.py --ab) — True in production
 ENABLED = True
 
 #: cap on memo entries for the whole process: a run touches a

@@ -160,33 +160,3 @@ def merge_ticks_incremental(
     )
     return days
 
-
-def run_live_upsert_incremental(
-    spark: SparkSession,
-    ticks_stream: DataFrame,
-    prices_path: str,
-    source: str = "alpaca",
-    trigger_seconds: int | None = 60,
-    checkpoint_dir: str | None = None,
-    available_now: bool = False,
-):
-    """Streaming wrapper: the T1-T7 pipeline of streaming.live but with
-    the partition-pruned merge as the ``foreachBatch`` sink."""
-    from asset_prices_parquet_saver_spark.streaming.live import (
-        dedupe_ticks_with_watermark,
-    )
-
-    def merge_batch(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        merge_ticks_incremental(spark, prices_path, batch, source=source)
-
-    deduped = dedupe_ticks_with_watermark(ticks_stream)
-    writer = deduped.writeStream.outputMode("update").foreachBatch(merge_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()

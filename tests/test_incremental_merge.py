@@ -14,9 +14,9 @@ from asset_prices_parquet_saver_spark.schema import BAR_SCHEMA, LIVE_TRADE_SCHEM
 from asset_prices_parquet_saver_spark.sources.prices_daily import (
     merge_ticks_incremental,
     read_prices_daily,
-    run_live_upsert_incremental,
     write_prices_daily,
 )
+from asset_prices_parquet_saver_spark.streaming.live import run_live_upsert
 
 
 def _bar(source, symbol, day, close):
@@ -109,7 +109,7 @@ def test_incremental_streaming_end_to_end(spark, tmp_path):
         LIVE_TRADE_SCHEMA,
     )
     batch.coalesce(1).write.mode("append").parquet(str(ticks_dir))
-    q = run_live_upsert_incremental(
+    q = run_live_upsert(
         spark,
         spark.readStream.schema(LIVE_TRADE_SCHEMA).parquet(str(ticks_dir)),
         path,
